@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import inspect
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -70,6 +70,31 @@ REASON_ENVELOPE_INVALID = "envelope-invalid"  # :112-113
 REASON_DATA_INVALID = "data-invalid"          # :115-116
 
 
+@dataclass(frozen=True)
+class _RoutingPlan:
+    """Every Column the engine applies to a batch, built once per
+    registration (``RoutingEngine._routing_plan``) and reused for every
+    batch — the analogue of the reference compiling each schema into an
+    AJV validator once (kinesisHandler.js:83-84,93) rather than per
+    record.  Building it walks every schema document (validator
+    predicates, type-fidelity checks) at thousands of py4j round trips;
+    applying it is a handful of ``withColumns``/``filter``/``select``.
+
+    ``decode`` maps the ``data`` column's type (``"string"``: base64
+    text, ``"binary"``: raw bytes) to the ``_payload_bytes`` Column;
+    ``stages`` run in order after the transformer, each one
+    ``withColumns`` whose Columns read only earlier stages; ``bad`` /
+    ``valid`` / ``unknown`` and ``branches[sid]`` (predicate, ``event``
+    alias) select the channels."""
+
+    decode: dict[str, Column]
+    stages: tuple[dict[str, Column], ...]
+    bad: Column
+    valid: Column
+    unknown: Column
+    branches: dict[str, tuple[Column, Column]]
+
+
 @dataclass
 class RoutingResult:
     """Outcome of routing one (micro-)batch.
@@ -85,7 +110,7 @@ class RoutingResult:
     dead_letter: DataFrame
     _cached: DataFrame | None = None
     _enriched: DataFrame | None = None
-    _registered: list[str] = field(default_factory=list)
+    _plan: _RoutingPlan | None = None
 
     def unpersist(self) -> None:
         """Release the cached enriched frame (set by
@@ -104,27 +129,16 @@ class RoutingResult:
     def metrics(self) -> dict[str, int]:
         """Routing counts per channel in ONE Spark job: each enriched row
         is tagged with its channel (routed.<sid> / unknown /
-        dead_letter.<reason>) and counted in a single ``groupBy``.
+        dead_letter.<reason>) by the same predicates that select the
+        channels, and counted in a single ``groupBy``.
         Counts are channel ASSIGNMENTS (records entering each handler),
         not handler output sizes — a handler may aggregate.  For
         streaming observability prefer ``df.observe`` /
         StreamingQueryListener (R15/R18, no per-record logging)."""
-        registered = self._registered
-        unknown_pred = F.col("data_schema").isNull()
-        if registered:
-            unknown_pred = unknown_pred | ~F.col("data_schema").isin(registered)
-        else:
-            # parity with process_batch: with nothing registered, every
-            # VALID record is channel `unknown` — otherwise a valid row
-            # with a data_schema would be counted under routed.<sid> and
-            # silently dropped from the output dict (sum != batch size)
-            unknown_pred = F.lit(True)
+        plan = self._plan
         channel = (
-            F.when(
-                F.col("reason").isNotNull(),
-                F.concat(F.lit("dead_letter."), F.col("reason")),
-            )
-            .when(unknown_pred, F.lit("unknown"))
+            F.when(plan.bad, F.concat(F.lit("dead_letter."), F.col("reason")))
+            .when(plan.unknown, F.lit("unknown"))
             .otherwise(F.concat(F.lit("routed."), F.col("data_schema")))
         )
         counts = {
@@ -134,7 +148,7 @@ class RoutingResult:
             .collect()
         }
         out = {
-            f"routed.{sid}": counts.get(f"routed.{sid}", 0) for sid in registered
+            f"routed.{sid}": counts.get(f"routed.{sid}", 0) for sid in plan.branches
         }
         out["unknown"] = counts.get("unknown", 0)
         dl = {k: v for k, v in counts.items() if k.startswith("dead_letter.")}
@@ -170,6 +184,7 @@ class RoutingEngine:
         self.transformer = transformer
         self.ordered = ordered
         self._registry: dict[str, tuple[CompiledSchema, Callable]] = {}
+        self._plan: _RoutingPlan | None = None
 
     # -- registration (R3, kinesisHandler.js:91-99) ----------------------
 
@@ -202,48 +217,29 @@ class RoutingEngine:
                 f"DataFrame argument (got {len(required)} required params)"
             )
         self._registry[compiled.schema_id] = (compiled, handler)
+        self._plan = None  # rebuilt, with the new branch, on the next batch
         return self
 
     @property
     def registered_ids(self) -> list[str]:
         return sorted(self._registry)
 
-    # -- batch core (R4-R13, R17) ----------------------------------------
+    # -- routing plan: built once per registration -----------------------
 
-    def _enrich(self, records: DataFrame) -> DataFrame:
-        """Single-pass classification: add payload/parse columns, the
-        dead-letter ``reason``, and the route's ``data_schema``."""
-        if "data" not in records.columns:
-            raise ValueError("records must carry a 'data' column (kinesis.data)")
+    def _routing_plan(self) -> _RoutingPlan:
+        """The memoized plan; built on first use, not in ``__init__`` or
+        ``register``, so registration stays as cheap as compiling the
+        schema documents."""
+        if self._plan is None:
+            self._plan = self._build_plan()
+        return self._plan
 
-        data_is_binary = dict(records.dtypes)["data"] == "binary"
-        payload_bytes: Column = (
-            F.col("data")
-            if data_is_binary
-            else F.try_to_binary(F.col("data"), F.lit("base64"))
-        )
-        df = records.withColumn("_payload_bytes", payload_bytes).withColumn(
-            "payload", F.col("_payload_bytes").cast("string")
-        )
-
-        if self.transformer is not None:
-            # R7: user hook reshapes the payload with envelope fields in
-            # scope; it must return a DataFrame retaining `payload`.
-            df = self.transformer(df)
-            # the reason chain downstream also reads `data` and the
-            # internal `_payload_bytes`; a transformer that selects only
-            # `payload` would otherwise crash later with an
-            # UNRESOLVED_COLUMN naming a private column it never saw
-            missing = [
-                c for c in ("payload", "data", "_payload_bytes")
-                if c not in df.columns
-            ]
-            if missing:
-                raise ValueError(
-                    "transformer must keep the columns "
-                    f"{missing} (reshape the payload, don't project "
-                    "them away)"
-                )
+    def _build_plan(self) -> _RoutingPlan:
+        data = F.col("data")
+        decode = {
+            "binary": data,
+            "string": F.try_to_binary(data, F.lit("base64")),
+        }
 
         # SINGLE-PARSE: the payload JSON is parsed exactly once, into a
         # VARIANT; the envelope struct, both schema-id strings, and every
@@ -253,51 +249,41 @@ class RoutingEngine:
         # the r5 shape re-tokenized the same JSON with from_json once
         # per consumer (envelope + every branch validator + every routed
         # branch: 3-4 full parses per row).
-        parsed = F.try_parse_json(F.col("payload"))
-        df = (
-            df.withColumn("_parsed", parsed)
-            .withColumn(
-                # try_cast with the real StructType, NOT
-                # try_variant_get(..., struct.simpleString()): the
-                # simpleString round-trips through the DDL type parser,
-                # which rejects any JSON property name that is not a
-                # bare identifier (hyphens, spaces, dots — all legal
-                # JSON keys, e.g. "content-type") with a plan-analysis
-                # PARSE/INVALID_IDENTIFIER error that would fail the
-                # whole micro-batch.  Casting a VARIANT to a struct has
-                # the same semantics ("$" extraction, NULL on
-                # mismatch) without ever serializing field names.
-                "_env",
-                F.col("_parsed").try_cast(self.envelope.struct),
-            )
-            .withColumn(
-                "_env_schema",
-                F.try_variant_get(F.col("_parsed"), "$.schema", "string"),
-            )
-            .withColumn(
-                "data_schema",
-                F.try_variant_get(F.col("_parsed"), "$.data.schema", "string"),
-            )
-        )
+        parse = {"_parsed": F.try_parse_json(F.col("payload"))}
+        parsed = F.col("_parsed")
+        extract = {
+            # try_cast with the real StructType, NOT
+            # try_variant_get(..., struct.simpleString()): the
+            # simpleString round-trips through the DDL type parser,
+            # which rejects any JSON property name that is not a
+            # bare identifier (hyphens, spaces, dots — all legal
+            # JSON keys, e.g. "content-type") with a plan-analysis
+            # PARSE/INVALID_IDENTIFIER error that would fail the
+            # whole micro-batch.  Casting a VARIANT to a struct has
+            # the same semantics ("$" extraction, NULL on
+            # mismatch) without ever serializing field names.
+            "_env": parsed.try_cast(self.envelope.struct),
+            "_env_schema": F.try_variant_get(parsed, "$.schema", "string"),
+            "data_schema": F.try_variant_get(parsed, "$.data.schema", "string"),
+        }
 
         # R9: fast-path envelopes evaluate a codegen predicate over the
         # parsed struct; fallback envelopes (composition keywords) run
         # jsonschema over the raw payload in an Arrow-batched pandas UDF.
         envelope_ok = self.envelope.validate(
-            F.col("payload"), F.col("_env"), F.col("_parsed")
+            F.col("payload"), F.col("_env"), parsed
         )
-        reason = (
-            F.when(F.col("data").isNull(), REASON_MISSING_DATA)
+        classify = {
+            "reason": F.when(data.isNull(), REASON_MISSING_DATA)
             .when(F.col("_payload_bytes").isNull(), REASON_BAD_BASE64)
-            .when(F.col("_parsed").isNull(), REASON_BAD_JSON)
+            .when(parsed.isNull(), REASON_BAD_JSON)
             .when(F.col("_env_schema").isNull(), REASON_NO_SCHEMA)
             .when(
                 F.col("_env_schema") != F.lit(self.envelope.schema_id),
                 REASON_WRONG_SCHEMA,
             )
             .when(~envelope_ok, REASON_ENVELOPE_INVALID)
-        )
-        df = df.withColumn("reason", reason)
+        }
 
         # R10: per-registered-branch data validation.  Each branch
         # extracts its typed struct from the shared variant ONCE, gated
@@ -307,17 +293,18 @@ class RoutingEngine:
         # compact typed structs (≈1 payload's worth across branches,
         # since each row populates exactly one) instead of the variant
         # binary.  Invalid data => dead letter.
+        data_schema = F.col("data_schema")
         data_invalid = F.lit(False)
+        branches: dict[str, tuple[Column, Column]] = {}
         for sid, (compiled, _) in sorted(self._registry.items()):
-            on_branch = F.col("data_schema") == F.lit(sid)
+            on_branch = data_schema == F.lit(sid)
+            event = F.col(self._event_col(sid))
             # try_cast(StructType), not try_variant_get(simpleString):
             # see the _env comment — DDL round-trip breaks on
             # non-identifier JSON property names.
-            branch_event = F.when(
-                on_branch,
-                F.col("_parsed").try_cast(compiled.struct),
+            classify[self._event_col(sid)] = F.when(
+                on_branch, parsed.try_cast(compiled.struct)
             )
-            df = df.withColumn(self._event_col(sid), branch_event)
             # Gate the payload on the branch condition BEFORE it reaches
             # the validator: Catalyst extracts pandas UDFs into an
             # ArrowEvalPython node evaluated for EVERY row regardless of
@@ -328,16 +315,76 @@ class RoutingEngine:
             # the Python side's null check skips them at ~zero cost.
             # (The JVM fast path ignores the payload column entirely.)
             gated_payload = F.when(on_branch, F.col("payload"))
-            branch_bad = on_branch & ~compiled.validate(
-                gated_payload, F.col(self._event_col(sid)), F.col("_parsed")
-            )
+            branch_bad = on_branch & ~compiled.validate(gated_payload, event, parsed)
             data_invalid = data_invalid | F.coalesce(branch_bad, F.lit(False))
-        df = df.withColumn(
-            "reason",
-            F.when(F.col("reason").isNotNull(), F.col("reason")).when(
+            branches[sid] = (on_branch, event.alias("event"))
+        reason = F.col("reason")
+        verdict = {
+            "reason": F.when(reason.isNotNull(), reason).when(
                 data_invalid, REASON_DATA_INVALID
-            ),
+            )
+        }
+
+        # A valid envelope with NULL $.data.schema must land in `unknown`
+        # (every record lands in exactly one channel — the reference's
+        # unknown-schema skip, kinesisHandler.js:120-122).  A bare
+        # `~isin(...)` evaluates to NULL for NULL data_schema and would
+        # silently drop the row from all three channels.  With nothing
+        # registered, every valid record is unknown.
+        unknown = (
+            data_schema.isNull() | ~data_schema.isin(list(self._registry))
+            if self._registry
+            else F.lit(True)
         )
+        bad = reason.isNotNull()
+        return _RoutingPlan(
+            decode=decode,
+            stages=(parse, extract, classify, verdict),
+            bad=bad,
+            valid=~bad,
+            unknown=unknown,
+            branches=branches,
+        )
+
+    # -- batch core (R4-R13, R17) ----------------------------------------
+
+    def _enrich(self, records: DataFrame) -> DataFrame:
+        """Single-pass classification: apply the routing plan, adding
+        payload/parse columns, the dead-letter ``reason``, and the
+        route's ``data_schema``."""
+        dtypes = dict(records.dtypes)
+        if "data" not in dtypes:
+            raise ValueError("records must carry a 'data' column (kinesis.data)")
+        plan = self._routing_plan()
+        df = records.withColumn(
+            "_payload_bytes",
+            plan.decode["binary" if dtypes["data"] == "binary" else "string"],
+        ).withColumn("payload", F.col("_payload_bytes").cast("string"))
+
+        if self.transformer is not None:
+            # R7: user hook reshapes the payload with envelope fields in
+            # scope; it must return a DataFrame retaining `payload`.
+            # Called on every batch's fresh frame — only the plan's
+            # Columns are reused.
+            df = self.transformer(df)
+            # the reason chain downstream also reads `data` and the
+            # internal `_payload_bytes`; a transformer that selects only
+            # `payload` would otherwise crash later with an
+            # UNRESOLVED_COLUMN naming a private column it never saw
+            columns = df.columns
+            missing = [
+                c for c in ("payload", "data", "_payload_bytes")
+                if c not in columns
+            ]
+            if missing:
+                raise ValueError(
+                    "transformer must keep the columns "
+                    f"{missing} (reshape the payload, don't project "
+                    "them away)"
+                )
+
+        for stage in plan.stages:
+            df = df.withColumns(stage)
         # Drop ALL parse intermediates including the variant: the routed
         # branches read their pre-extracted `_event_<i>` structs, so
         # nothing downstream needs `_parsed`, and the cached micro-batch
@@ -360,13 +407,25 @@ class RoutingEngine:
         Returns lazy DataFrames — callers trigger execution by writing
         or counting.  All branches derive from one enriched plan, so at
         scale this is a single scan fanned into N filters (vs. the
-        reference's per-record linear registry scan, :114).
+        reference's per-record linear registry scan, :114).  The Python
+        side of that plan (every Column and predicate) is built on the
+        first batch and reused until the next ``register``.
 
         ``cache=True`` persists the enriched frame so the decode/parse/
         validate work runs ONCE per batch instead of once per channel
         write (N routed + dead-letter + unknown) — run_stream sets it
         and unpersists via ``RoutingResult.unpersist`` after the sinks
-        commit. Callers consuming only one channel can skip it."""
+        commit.  Without it, even a caller consuming a single channel
+        pays far more than one pass: Catalyst pushes the channel's
+        filters down through the alias projections and inlines the
+        decode into every expression that reads it, so on a 20k-record
+        batch of the perfbench registration the optimized plan of one
+        routed channel repeats the base64 decode 114 times, and writing
+        that channel to the ``noop`` sink took about 4 s, against under
+        0.1 s from the cache plus about 1.5 s to fill it (4-vCPU VM,
+        C1-only JVM as in perfbench; with the default JIT, 1.7 s
+        against 0.07 s + 1.1 s).  Pass ``cache=True`` unless the batch
+        is tiny, and ``unpersist`` when done."""
         # Schema-fallback validation and ordered-mode handlers run
         # package code on executor workers; ship it for foreign-cwd
         # drivers (deploy.py).
@@ -384,41 +443,20 @@ class RoutingEngine:
     def _build_result(
         self, records: DataFrame, enriched: DataFrame, cache: bool
     ) -> RoutingResult:
-        is_bad = F.col("reason").isNotNull()
-        registered = list(self._registry)
+        plan = self._routing_plan()
+        # the envelope columns every channel carries, from one schema
+        # read: not part of the plan, as they follow the batch's columns
+        # and whatever the transformer kept
+        present = set(enriched.columns)
+        keep = [c for c in records.columns if c in present]
 
-        dead_letter = enriched.filter(is_bad).select(
-            *[c for c in records.columns if c in enriched.columns],
-            "payload",
-            "reason",
-        )
-        valid = enriched.filter(~is_bad)
-        # A valid envelope with NULL $.data.schema must land in `unknown`
-        # (every record lands in exactly one channel — the reference's
-        # unknown-schema skip, kinesisHandler.js:120-122).  A bare
-        # `~isin(...)` evaluates to NULL for NULL data_schema and would
-        # silently drop the row from all three channels.
-        unknown_pred = F.col("data_schema").isNull()
-        if registered:
-            unknown_pred = unknown_pred | ~F.col("data_schema").isin(registered)
-        else:
-            unknown_pred = F.lit(True)
-        unknown = valid.filter(unknown_pred).select(
-            *[c for c in records.columns if c in enriched.columns],
-            "payload",
-            "data_schema",
-        )
-
+        dead_letter = enriched.filter(plan.bad).select(*keep, "payload", "reason")
+        valid = enriched.filter(plan.valid)
+        unknown = valid.filter(plan.unknown).select(*keep, "payload", "data_schema")
         routed: dict[str, DataFrame] = {}
-        for sid, (compiled, handler) in sorted(self._registry.items()):
-            branch = (
-                valid.filter(F.col("data_schema") == F.lit(sid))
-                .withColumn("event", F.col(self._event_col(sid)))
-                .select(
-                    *[c for c in records.columns if c in enriched.columns],
-                    "event",
-                )
-            )
+        for sid, (_, handler) in sorted(self._registry.items()):
+            on_branch, event = plan.branches[sid]
+            branch = valid.filter(on_branch).select(*keep, event)
             routed[sid] = handler(branch)  # R11 dispatch / R17 parallel
         return RoutingResult(
             routed=routed,
@@ -426,7 +464,7 @@ class RoutingEngine:
             dead_letter=dead_letter,
             _cached=enriched if cache else None,
             _enriched=enriched,
-            _registered=registered,
+            _plan=plan,
         )
 
     # -- streaming entry point (R4, R13-R15) ------------------------------
@@ -460,10 +498,11 @@ class RoutingEngine:
         a thread pool — each write is a separate job over the already-
         cached enriched frame, so they schedule side-by-side instead of
         serially idling the cluster between commits (the channel writes
-        dominate micro-batch wall-clock; measured ~2.2× end-to-end
-        throughput at 600k records / 4 sinks on local[32] via
-        tools/bench_streaming.py, ~1.1× on small batches where per-batch
-        fixed costs dominate).  Any sink failure still
+        dominate micro-batch wall-clock: ~2.2× end-to-end throughput
+        measured at 600k records / 4 sinks on local[32], ~1.1× on small
+        batches where per-batch fixed costs dominate; perfbench's
+        ``stream`` workload drains this way, one thread per core).  Any
+        sink failure still
         fails the whole micro-batch (R14): every thread is joined and
         the first exception re-raised before the batch commits.
         """

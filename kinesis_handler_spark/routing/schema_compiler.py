@@ -160,9 +160,10 @@ class CompiledSchema:
                 base = base & _type_fidelity(self.doc, variant_col)
             return base
         # Build the pandas UDF once per CompiledSchema (not once per
-        # micro-batch): process_batch calls validate() every batch, and
-        # a fresh UDF each time re-ships a new closure and re-pays
-        # plan-side setup.  Frozen dataclass => stash via object.__setattr__.
+        # routing plan): the engine rebuilds its plan, calling validate()
+        # again, after every register(), and a fresh UDF each time
+        # re-ships a new closure and re-pays plan-side setup.  Frozen
+        # dataclass => stash via object.__setattr__.
         udf = getattr(self, "_py_udf", None)
         if udf is None:
             udf = _jsonschema_udf(self.doc)

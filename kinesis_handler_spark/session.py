@@ -12,6 +12,34 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Share of physical memory the default driver heap may take: the rest is
+# for the Python workers (one per core under pandas UDFs), the driver's
+# own Python process and the OS page cache the local dirs lean on.
+_HEAP_SHARE = 0.4
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for the local JVM.
+
+    ``$SPARK_GRAFT_DRIVER_MEM`` wins when set.  Otherwise the heap is
+    sized from ``MemTotal`` in ``meminfo``: ``_HEAP_SHARE`` of it, at
+    least 1 GiB and at most 16 GiB.  Where ``meminfo`` cannot be read
+    (not Linux) the default stays 16g.  A local[N] JVM with a 16g
+    ceiling on a 15 GiB host grows its heap instead of collecting and
+    can take the whole machine."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    heap_mb = int(total_kb * _HEAP_SHARE) // 1024
+    return f"{max(1024, min(heap_mb, 16 * 1024))}m"
+
 
 def get_spark(
     app_name: str = "kinesis-handler-spark",
@@ -30,12 +58,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         # local[N] = ONE JVM doing driver + executor work; the 1g
-        # default heap OOMs under cached micro-batches at bench scale.
-        # Honored only at JVM launch (first session in the process).
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
+        # default heap OOMs under cached micro-batches at bench scale;
+        # driver_memory() sizes it to the host.  Honored only at JVM
+        # launch (first session in the process).
+        .config("spark.driver.memory", driver_memory())
         # AQE: runtime re-plan — broadcast conversion, partition coalescing,
         # skew-join splitting.  Non-negotiable at 100 TB.
         .config("spark.sql.adaptive.enabled", "true")

@@ -3,11 +3,19 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kinesis_handler_spark.routing import ENVELOPE_SCHEMA, RoutingEngine
+from kinesis_handler_spark.routing import (
+    ENVELOPE_SCHEMA,
+    CompiledSchema,
+    RoutingEngine,
+)
 from kinesis_handler_spark.routing.engine import (
     REASON_BAD_BASE64,
     REASON_BAD_JSON,
@@ -447,3 +455,133 @@ def test_hostile_payload_values_classify_not_crash(spark, engine):
     created = result.routed[fx.PRODUCT_CREATE_ID]
     ids = {r["id"] for r in created.select("event.data.id").collect()}
     assert hostile_id in ids, ids
+
+
+# -- routing plan reuse: built once per registration, not per batch --------
+
+
+def _count_plan_builds(monkeypatch) -> list:
+    builds = []
+    build = RoutingEngine._build_plan
+
+    def counting(self):
+        builds.append(self)
+        return build(self)
+
+    monkeypatch.setattr(RoutingEngine, "_build_plan", counting)
+    return builds
+
+
+def _mixed_rows() -> list:
+    return (
+        fx.batch_ok()
+        + fx.batch_unknown_schema()
+        + fx.batch_bad_json()
+        + fx.batch_invalid_data()
+    )
+
+
+def test_two_batches_build_the_plan_once(spark, engine, monkeypatch):
+    builds = _count_plan_builds(monkeypatch)
+    validated = []
+    validate = CompiledSchema.validate
+
+    def counting_validate(self, *args):
+        validated.append(self.schema_id)
+        return validate(self, *args)
+
+    monkeypatch.setattr(CompiledSchema, "validate", counting_validate)
+    df = make_df(spark, _mixed_rows())
+    first = engine.process_batch(df).metrics()
+    second = engine.process_batch(df, cache=True)
+    try:
+        assert second.metrics() == first
+    finally:
+        second.unpersist()
+    assert first[f"routed.{fx.PRODUCT_CREATE_ID}"] == 3
+    assert first["dead_letter"] == 4
+    assert len(builds) == 1
+    # one validator per schema (envelope + two branches), for both batches
+    assert sorted(validated) == sorted(
+        [fx.STREAM_SCHEMA_ID, fx.PRODUCT_CREATE_ID, fx.PRODUCT_PURCHASE_ID]
+    )
+
+
+def test_schema_registered_after_a_batch_routes_on_the_next(spark, monkeypatch):
+    builds = _count_plan_builds(monkeypatch)
+    eng = RoutingEngine(fx.ENVELOPE_JSON_SCHEMA)
+    eng.register(fx.PRODUCT_CREATE_SCHEMA, identity_handler)
+    df = make_df(spark, fx.batch_ok())
+    before = eng.process_batch(df).metrics()
+    assert before[f"routed.{fx.PRODUCT_CREATE_ID}"] == 3
+    assert before["unknown"] == 2
+    eng.register(fx.PRODUCT_PURCHASE_SCHEMA, identity_handler)
+    result = eng.process_batch(df)
+    after = result.metrics()
+    assert after[f"routed.{fx.PRODUCT_PURCHASE_ID}"] == 2
+    assert after["unknown"] == 0
+    assert result.routed[fx.PRODUCT_PURCHASE_ID].count() == 2
+    assert result.unknown.count() == 0
+    assert len(builds) == 2
+
+
+def test_string_then_binary_data_through_one_engine(spark, engine, monkeypatch):
+    builds = _count_plan_builds(monkeypatch)
+    text = make_df(spark, _mixed_rows())
+    binary = text.withColumn("data", F.unbase64("data"))
+    assert dict(binary.dtypes)["data"] == "binary"
+    from_text = engine.process_batch(text).metrics()
+    result = engine.process_batch(binary)
+    assert result.metrics() == from_text
+    assert result.routed[fx.PRODUCT_PURCHASE_ID].count() == 2
+    assert engine.process_batch(text).metrics() == from_text
+    assert from_text[f"routed.{fx.PRODUCT_CREATE_ID}"] == 3
+    assert from_text["unknown"] == 1
+    assert len(builds) == 1
+
+
+# Stops the session, so it runs in its own process: the suite's
+# session-scoped `spark` fixture must outlive this test.
+_RESTART_PROBE = """
+from kinesis_handler_spark.routing import ENVELOPE_SCHEMA, RoutingEngine
+from kinesis_handler_spark.session import get_spark
+from tests import fixtures as fx
+from tests.test_schema_fallback import COUPON_SCHEMA, coupon_batch
+
+eng = RoutingEngine(fx.ENVELOPE_JSON_SCHEMA)
+for schema in (fx.PRODUCT_CREATE_SCHEMA, fx.PRODUCT_PURCHASE_SCHEMA, COUPON_SCHEMA):
+    eng.register(schema, lambda df: df)
+rows = fx.batch_ok() + fx.batch_unknown_schema() + fx.batch_bad_json() + coupon_batch()
+plans = []
+for _ in range(2):
+    spark = get_spark("plan-restart-probe", cpus=2, shuffle_partitions=2)
+    spark.sparkContext.setLogLevel("ERROR")
+    result = eng.process_batch(spark.createDataFrame(rows, ENVELOPE_SCHEMA), cache=True)
+    result.materialize()
+    counts = {sid: df.count() for sid, df in result.routed.items()}
+    counts.update(unknown=result.unknown.count(), dead_letter=result.dead_letter.count())
+    result.unpersist()
+    plans.append(eng._plan)
+    print("COUNTS", sorted(counts.items()))
+    spark.stop()
+print("PLANS", len({id(p) for p in plans}))
+"""
+
+
+def test_engine_reused_across_session_restart():
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_PROBE],
+        capture_output=True,
+        text=True,
+        env={**os.environ, "PYTHONPATH": repo, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        cwd=repo,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    lines = out.stdout.splitlines()
+    counts = [ln for ln in lines if ln.startswith("COUNTS")]
+    assert len(counts) == 2 and counts[0] == counts[1], lines
+    assert "('com.example/coupon-apply/1-0-0', 2)" in counts[0]
+    assert "('unknown', 1)" in counts[0] and "('dead_letter', 4)" in counts[0]
+    assert "PLANS 1" in lines
